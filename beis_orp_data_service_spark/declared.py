@@ -315,7 +315,7 @@ def q_not(spark, sf_dir):
     """,
 )
 def q_sort_page(spark, sf_dir):
-    # Q8+Q9+Q10 — sort + offset pagination via row_number window
+    # Q8+Q9+Q10 — sort + offset pagination: one TakeOrderedAndProject(limit, offset)
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )

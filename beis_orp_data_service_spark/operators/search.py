@@ -18,9 +18,9 @@ Operator map (SURVEY.md §2.5):
   Q5 date range          search_functions.py:50-57   → >= / <=
   Q6 substring           search_functions.py:59-61   → lower(col).contains
   Q7 not-archive         search_functions.py:16,26,64→ col != 'archive'
-  Q8 limit guard         search_functions.py:64      → limit
+  Q8 limit guard         search_functions.py:64      → cap on the sorted limit
   Q9 sort                search_functions.py:98,121  → orderBy
-  Q10 pagination         search_functions.py:122     → row_number window
+  Q10 pagination         search_functions.py:122     → limit(offset+size).offset(offset)
   Q11 two-phase fetch    search_functions.py:90-125  → single plan (pruning)
   Q15 left-join merge    search_functions.py:128-131 → left join + coalesce
   Q18 projection         search_functions.py:4-6     → select
@@ -31,7 +31,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 SEARCH_MATCH_LIMIT = 10_000  # search_functions.py:64
@@ -54,6 +54,10 @@ class SearchParams:
     page: int = 0  # 0-based, reference handler.py:20 (offset = page*size)
     page_size: int = DEFAULT_PAGE_SIZE
     order: str = "desc"  # sort on date_published
+
+    def __post_init__(self) -> None:
+        if self.page < 0 or self.page_size < 0:
+            raise ValueError(f"page and page_size must be >= 0: {self.page}, {self.page_size}")
 
 
 def not_archived(status_col: str = "status") -> Column:
@@ -89,6 +93,11 @@ def build_predicate(p: SearchParams) -> Column:
     return pred
 
 
+def page_rows(page: int, page_size: int) -> range:
+    """Q8 + Q10 — the rows of the sorted, capped match list a page holds."""
+    return range(SEARCH_MATCH_LIMIT)[page * page_size : (page + 1) * page_size]
+
+
 def sort_page(
     df: DataFrame,
     order_col: str,
@@ -104,27 +113,17 @@ def sort_page(
     column makes pagination stable — the reference relies on pandas'
     stable sort (search_functions.py:121-122).
 
-    Scale shape: ``orderBy(...).limit(offset+size)`` compiles to
-    TakeOrderedAndProject — a distributed per-partition top-K followed by
-    a driver-side merge of K rows per partition — so no global sort and
-    no single-partition shuffle ever happens. The row_number window that
-    drops the offset then runs over at most offset+size rows.
+    Scale shape: ``orderBy(...).limit(offset+size).offset(offset)`` is one
+    root TakeOrderedAndProject(limit, offset) — per-partition top-K, driver
+    merge, one job: no exchange, no global sort, no window.
     """
     cols = (
         [F.col(order_col).asc(), F.col(tiebreak).asc()]
         if ascending
         else [F.col(order_col).desc(), F.col(tiebreak).desc()]
     )
-    lo = page * page_size
-    top = df.orderBy(*cols).limit(lo + page_size)
-    # Window scale: window runs on the orderBy().limit(offset+page)
-    # result, ≤ offset+page rows.
-    w = Window.orderBy(*cols)
-    return (
-        top.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > lo)
-        .drop("_rn")
-    )
+    rows = page_rows(page, page_size)
+    return df.orderBy(*cols).limit(rows.stop).offset(rows.start)
 
 
 def search(
@@ -132,16 +131,22 @@ def search(
     params: SearchParams,
     legislation_edges: DataFrame | None = None,
     return_cols: Sequence[str] | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """The full search entry point — one Catalyst plan instead of the
     reference's three sequential TypeDB round-trips (search_functions.py:88-144).
 
     Phase structure of the reference (ids+dates → page → full attrs →
-    legislative origins) collapses into filter → limit-guard → sort+page →
+    legislative origins) collapses into filter → sort+page+match cap →
     left join → project; Catalyst prunes the unused columns from phase 1
     automatically.
+
+    ``observation`` counts the matches (``n``) in the same job. A page Spark
+    proves empty (by ``page_rows``, or a source's known size) leaves it empty.
     """
-    filtered = documents.filter(build_predicate(params)).limit(SEARCH_MATCH_LIMIT)
+    filtered = documents.filter(build_predicate(params))
+    if observation is not None:
+        filtered = filtered.observe(observation, F.count(F.lit(1)).alias("n"))
     paged = sort_page(
         filtered,
         order_col="date_published",

@@ -6,21 +6,21 @@ validation with the 400 path for unsupported keys (handler.py:54-58),
 defaulted paging (page 1, size 10 — handler.py:20,51-52), and the
 response envelope {status_code, total_search_results, documents}
 (handler.py:60-71), with the three TypeDB round-trips collapsed into
-one Catalyst plan (SURVEY §3.2).
+one Spark job (SURVEY §3.2) that also counts the matches via ``observe``.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation
 
 from beis_orp_data_service_spark.operators.search import (
     SEARCH_MATCH_LIMIT,
     SearchParams,
     build_predicate,
-    sort_page,
+    page_rows,
+    search,
 )
 
 ACCEPTED_KEYS = {
@@ -47,7 +47,7 @@ def parse_request(body: dict[str, Any]) -> SearchParams:
     if unsupported:
         raise ValueError(f"unsupported search parameters: {sorted(unsupported)}")
     dates = body.get("date_published") or {}
-    return SearchParams(
+    return SearchParams(  # negative page or page_size raises (the 400 path)
         id=body.get("id"),
         keyword=body.get("keyword", []),
         title=body.get("title"),
@@ -78,21 +78,16 @@ def handle_search(
     except ValueError as e:
         return {"status_code": 400, "error": str(e)}
 
-    filtered = documents.filter(build_predicate(params)).limit(SEARCH_MATCH_LIMIT)
-    total = filtered.count()
-    paged = sort_page(
-        filtered,
-        order_col="date_published",
-        ascending=(params.order == "asc"),
-        page=params.page,
-        page_size=params.page_size,
-        tiebreak="document_uid",
-    )
-    if legislation_edges is not None:
-        paged = paged.join(F.broadcast(legislation_edges), "document_uid", "left")
+    obs = Observation() if page_rows(params.page, params.page_size) else None
+    paged = search(documents, params, legislation_edges, observation=obs)
     docs = [r.asDict(recursive=True) for r in paged.collect()]
+    row = obs._jo.getRow() if obs else None  # Observation.get fails on an empty row
+    if row is not None and row.length():
+        total = row.getLong(0)
+    else:  # no observation, or Spark folded it away (search() docstring)
+        total = documents.filter(build_predicate(params)).limit(SEARCH_MATCH_LIMIT).count()
     return {
         "status_code": 200 if docs else 404,  # empty-result path handler.py:69-71
-        "total_search_results": total,
+        "total_search_results": min(total, SEARCH_MATCH_LIMIT),
         "documents": docs,
     }

@@ -191,11 +191,8 @@ ALLOW_BNLJ = {
 # which inspects package SOURCE) and the plan gate: a plan-level global
 # window reaching a declared query is now caught mechanically.
 ALLOW_GLOBAL_WINDOW: dict[str, str] = {
-    # pagination spelling: row_number over an orderBy().limit(offset+
-    # page) result — ≤ offset+page rows reach the window (search.py
-    # paged_sort, 'Window scale' marker there)
-    "q_search_flagship": "row_number over limit(offset+page) rows",
-    "q_sort_page": "row_number over limit(offset+page) rows",
+    # rerank page: row_number over an orderBy().limit(k) result — ≤ k
+    # rows reach the window (ranking.py rerank_topk 'Window scale' marker)
     "search_rerank": "row_number over limit(offset+page) candidate page",
     # planted-violation fixture: window over an orderBy().limit(3)
     # result (declared.py dq_report_q inline marker)

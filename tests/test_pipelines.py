@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import threading
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -126,6 +128,73 @@ def test_search_api_empty_and_400(spark, searchable):
     assert empty["status_code"] == 404 and empty["documents"] == []
     bad = search_api.handle_search(searchable, {"frobnicate": 1})
     assert bad["status_code"] == 400 and "frobnicate" in bad["error"]
+
+
+def _returns(fn, seconds=120):
+    # run fn on a daemon thread: a hung call fails the test, not the suite
+    out = []
+
+    def run():
+        try:
+            out.append(fn())
+        except Exception as e:  # noqa: BLE001 - re-raised on the test thread
+            out.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert out, f"call did not return within {seconds} s"
+    if isinstance(out[0], Exception):
+        raise out[0]
+    return out[0]
+
+
+@pytest.mark.parametrize(
+    "limit, body, total",
+    [
+        (None, {"regulator_id": ["ea"], "page_size": 0}, 1),
+        (None, {"page": search_api.SEARCH_MATCH_LIMIT // 10}, 2),  # past the cap
+        (None, {"page": 10**9}, 2),  # offset past Spark's int range
+        (None, {"regulator_id": ["ea"], "page": 1}, 1),  # past the last match
+        # limit(3) tells Spark the source holds <= 3 rows, so it folds the
+        # page at offset 10 away, observation included
+        (3, {"page": 1}, 2),
+    ],
+)
+def test_search_api_empty_page_is_404_with_total(spark, searchable, limit, body, total):
+    docs = searchable if limit is None else searchable.limit(limit)
+    res = _returns(lambda: search_api.handle_search(docs, body))
+    assert res == {"status_code": 404, "total_search_results": total, "documents": []}
+
+
+@pytest.mark.parametrize("body", [{"page": -1}, {"page_size": -5}])
+def test_search_api_negative_paging_is_400(spark, searchable, body):
+    res = _returns(lambda: search_api.handle_search(searchable, body))
+    assert res["status_code"] == 400 and ">= 0" in res["error"]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs submitted while fn runs on this thread."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is listener-fed
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_api_is_one_spark_job(spark, searchable):
+    # page + count in one root top-K job; the edges join adds only the
+    # broadcast of the edges table
+    edges = spark.createDataFrame(
+        [("d2", "ukpga/2000/1")], "document_uid string, leg_href string"
+    )
+    body = {"regulator_id": ["ea"]}
+    assert _jobs(spark, lambda: search_api.handle_search(searchable, body)) == 1
+    assert _jobs(spark, lambda: search_api.handle_search(searchable, body, edges)) <= 2
 
 
 def test_legislation_refresh_idempotent_overlap(spark):

@@ -48,10 +48,14 @@ def test_traverse_broadcasts_dimension(spark):
 
 
 def test_sort_page_is_distributed_topk(spark):
-    # pagination must compile to TakeOrderedAndProject, not a global sort
+    # pagination must compile to TakeOrderedAndProject(limit, offset), not
+    # a global sort or a row_number window over the top-K
     plan = plan_of("q_sort_page", spark)
     assert "TakeOrderedAndProject" in plan
     assert "Sort [" not in plan.split("TakeOrderedAndProject")[0]
+    assert "Window" not in plan
+    args = plan.split("TakeOrderedAndProject\n")[1].split("Arguments: ")[1]
+    assert args.startswith("30, ") and args.split("\n")[0].endswith("], 20")
 
 
 def test_minhash_partial_aggregation(spark):

@@ -17,6 +17,7 @@ from beis_orp_data_service_spark.operators.search import (
     search,
     sort_page,
 )
+from beis_orp_data_service_spark.pipelines.search_api import handle_search
 
 
 def _ts(s: str) -> dt.datetime:
@@ -105,6 +106,27 @@ def test_search_end_to_end_with_left_join(spark, docs):
                  return_cols=["document_uid", "leg_href"])
     got = {r.document_uid: r.leg_href for r in out.collect()}
     assert got == {"d1": "ukpga/2000/1", "d2": None, "d4": None, "d5": None}
+
+
+def test_match_cap_applies_after_the_sort(spark):
+    # the cap truncates the SORTED match list (DuckDB ORDER BY ... LIMIT),
+    # not an arbitrary 10,000-row subset taken before the sort. 12,000
+    # matches in 4 partitions; date_published grows with scan order, so
+    # the 2,000 newest rows sit past the first 10,000 scanned
+    past_cap = spark.range(12_000, numPartitions=4).select(
+        F.format_string("u%05d", "id").alias("document_uid"),
+        F.lit("published").alias("status"),
+        F.timestamp_seconds(F.col("id") * 60).alias("date_published"),
+    )
+    newest = [f"u{i:05d}" for i in range(11_999, 11_989, -1)]
+    res = handle_search(past_cap, {})
+    assert res["total_search_results"] == 10_000
+    assert [d["document_uid"] for d in res["documents"]] == newest
+    out = search(past_cap, SearchParams())
+    assert [r.document_uid for r in out.collect()] == newest
+    # the last page inside the cap ends at the 10,000th newest row
+    last = search(past_cap, SearchParams(page=999))
+    assert [r.document_uid for r in last.collect()][-1] == "u02000"
 
 
 class TestGroupedTopK:
